@@ -126,8 +126,15 @@ object Bench {
         // A failed rep is EXCLUDED from the median rather than recorded
         // as a sentinel — a -1.0 inside the sort would make a 2/3-pass
         // query report its min as "median" and quietly shrink `total`.
+        // Its cause goes to stderr, so stdout keeps the one JSON
+        // metric line.
         try { timedAction(q.run(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => None }
+        catch {
+          case e: Throwable =>
+            val firstLine = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+            Console.err.println(s"[bench] ${q.name} rep failed: ${e.getClass.getName}: $firstLine")
+            None
+        }
       }.sorted
       // -1.0 only when EVERY rep failed: a consistently-failing query
       // must not report a plausible time.

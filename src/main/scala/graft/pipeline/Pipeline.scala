@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Analytics
-import graft.dq.DataQuality
+import graft.dq.{DataQuality, DqPass}
 import graft.ingest._
 import graft.parse.PopulationParser
 
@@ -132,8 +132,17 @@ object Pipeline {
 
   /** Task C: parse the raw zone, publish the three curated tables,
     * append the DQ run log, validate (20_analytics.ipynb cell 14).
+    *
+    * Each raw file is parsed once: the parsed `bls` and `population`
+    * frames are cached for the whole task, so the three publish writes,
+    * the DQ pass (`DataQuality.measure`: one quantile pass plus one
+    * aggregate read by one action) and the validation all read memory.
+    * Both frames are unpersisted in a `finally`, whether the task
+    * succeeds or throws, so no cached relation outlives the call and
+    * the next run over the same paths re-reads the files.
     */
   def runAnalytics(spark: SparkSession, config: PipelineConfig): Seq[String] = {
+    import spark.implicits._
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${config.database}")
     val db = config.database
 
@@ -143,35 +152,37 @@ object Pipeline {
       .load(s"${config.blsTargetDir}/${config.blsFileName}")
     val population = PopulationParser.parseFile(spark, config.populationTargetPath)
 
-    val tables = Seq(
-      s"$db.population_stats_2013_2018" -> Analytics.populationStats(population),
-      s"$db.bls_best_year_by_series" -> Analytics.bestYearBySeries(bls),
-      s"$db.report_prs30006032_q01" -> Analytics.reportSeriesQ01(bls, population))
-    tables.foreach { case (name, df) => TableSink.overwrite(df, name) }
+    try {
+      bls.cache()
+      population.cache()
+      val tables = Seq(
+        s"$db.population_stats_2013_2018" -> Analytics.populationStats(population),
+        s"$db.bls_best_year_by_series" -> Analytics.bestYearBySeries(bls),
+        s"$db.report_prs30006032_q01" -> Analytics.reportSeriesQ01(bls, population))
+      tables.foreach { case (name, df) => TableSink.overwrite(df, name) }
 
-    TableSink.append(DataQuality.summary(spark, bls, population), s"$db.dq_summary_runlog")
+      val dq = DataQuality.measure(bls, population)
+      TableSink.append(Seq(dq.row).toDF(), s"$db.dq_summary_runlog")
 
-    validate(spark, bls, population, tables.map(_._1))
-    tables.map(_._1)
+      validate(spark, dq, tables.map(_._1))
+      tables.map(_._1)
+    } finally {
+      bls.unpersist()
+      population.unpersist()
+    }
   }
 
   /** Inline validation (20_analytics.ipynb:3108-3172): non-empty
     * inputs, zero rows with null critical fields (hard failure), all
-    * output tables resolvable.
+    * output tables present in the catalog. The counts come from the
+    * run's DQ pass; no job runs here.
     */
-  def validate(
-      spark: SparkSession,
-      bls: DataFrame,
-      population: DataFrame,
-      outputTables: Seq[String]): Unit = {
-    require(bls.count() > 0, "BLS parse produced 0 rows")
-    require(population.count() > 0, "population parse produced 0 rows")
-    val badBls = bls.where(
-      col("series_id").isNull || col("year").isNull ||
-        col("period").isNull || col("value").isNull).count()
-    if (badBls != 0)
-      throw new RuntimeException(s"$badBls BLS rows with null critical fields")
-    outputTables.foreach(t => require(spark.table(t) != null, s"missing output table $t"))
+  def validate(spark: SparkSession, dq: DqPass, outputTables: Seq[String]): Unit = {
+    require(dq.row.bls_rows > 0, "BLS parse produced 0 rows")
+    require(dq.row.population_rows > 0, "population parse produced 0 rows")
+    if (dq.blsNullCritical != 0)
+      throw new RuntimeException(s"${dq.blsNullCritical} BLS rows with null critical fields")
+    outputTables.foreach(t => require(spark.catalog.tableExists(t), s"missing output table $t"))
   }
 
   def run(

@@ -1196,7 +1196,8 @@ object TextQueries {
     * partials; first sighting is min(decile) per type — decile is
     * monotone in doc_id, so decile(min(doc_id)) = min(decile)) and ONE
     * 1-row global roll-up (per-decile token totals + first-sighting
-    * type counts): 3 exchanges total (corpus spread, type hash, final
+    * type counts): 4 exchanges total (corpus spread, the 1-row corpus
+    * count's own aggregate under its broadcast, type hash, final
     * single row), zero joins, no runtime-reuse dependency. All
     * integers end-to-end, so cross-engine equality is exact.
     */

@@ -2,10 +2,13 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import java.time.Instant
+
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.util.Success
 
 import graft.SparkSpec
+import graft.dq.{DqPass, DqSummary}
 import graft.ingest._
 
 /** Full A ∥ B → C run against canned HTTP: fixture BLS listing/file and
@@ -71,5 +74,56 @@ class PipelineSpec extends SparkSpec {
 
     // overwrite publish is idempotent: re-run leaves the same row count
     assert(spark.table("graft_test_db.bls_best_year_by_series").count() == bestCount)
+  }
+
+  private def cacheIsEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
+
+  test("Task C re-reads rewritten raw files: no cached input outlives runAnalytics") {
+    val dir = Files.createTempDirectory("graft-stale-cache")
+    val cfg = PipelineConfig(
+      blsSource = source,
+      blsTargetDir = s"$dir/raw_bls",
+      populationUrl = apiUrl,
+      populationTargetPath = s"$dir/raw_datausa/population.json",
+      populationMetaPath = s"$dir/raw_datausa/_meta/population_ingest_run.json",
+      database = "graft_stale_cache_db")
+    val blsFile = Paths.get(cfg.blsTargetDir, cfg.blsFileName)
+    val popFile = Paths.get(cfg.populationTargetPath)
+    Files.createDirectories(blsFile.getParent)
+    Files.createDirectories(popFile.getParent)
+    Files.copy(Paths.get(fixturePath("pr.data.0.Current")), blsFile)
+    Files.copy(Paths.get(fixturePath("population.json")), popFile)
+    // frames other suites left cached would hide what this run leaves
+    spark.catalog.clearCache()
+
+    Pipeline.runAnalytics(spark, cfg)
+    assert(cacheIsEmpty, "runAnalytics left a cached relation behind")
+
+    Files.write(blsFile, Seq(
+      "series_id\tyear\tperiod\tvalue",
+      "PRS30006032\t2013\tQ01\t0.7",
+      "PRS30006032\t2014\tQ01\t-0.4",
+      "PRS30006011\t2014\tQ02\t1.5").mkString("", "\n", "\n").getBytes("UTF-8"))
+    Pipeline.runAnalytics(spark, cfg)
+    assert(cacheIsEmpty, "runAnalytics left a cached relation behind")
+    val blsRows = spark.table("graft_stale_cache_db.dq_summary_runlog").collect().toSeq
+      .sortBy(r => Instant.parse(r.getAs[String]("run_utc")))
+      .map(_.getAs[Long]("bls_rows"))
+    assert(blsRows == Seq(16L, 3L), "the second run must read the rewritten BLS file")
+    assert(spark.table("graft_stale_cache_db.bls_best_year_by_series").count() == 2)
+
+    // a population payload with no parseable row fails validation
+    Files.write(popFile, """{"data": [{"Nation": "United States", "Population": "n/a", "Year": 2013}]}"""
+      .getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](Pipeline.runAnalytics(spark, cfg))
+    assert(e.getMessage.contains("population parse produced 0 rows"))
+    assert(cacheIsEmpty, "a throwing runAnalytics left a cached relation behind")
+  }
+
+  test("validate names a missing output table") {
+    val row = DqSummary(16, 3, 6, 0, 10, 10, 0, 7, 0, 1, Instant.now().toString)
+    val e = intercept[IllegalArgumentException](
+      Pipeline.validate(spark, DqPass(row, 0), Seq("graft_test_db.no_such_table")))
+    assert(e.getMessage.contains("missing output table graft_test_db.no_such_table"))
   }
 }
