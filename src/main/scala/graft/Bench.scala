@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.queries.Registry
+import graft.queries.{Q, Registry}
 
 /** Benchmark main: runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
@@ -16,18 +16,81 @@ object Bench {
   private[graft] def num(v: Double, dp: Int): String =
     s"%.${dp}f".formatLocal(java.util.Locale.ROOT, v)
 
+  // The timed action is the NOOP SINK (guide §1.4), not count():
+  // count() lets Catalyst prune every column the count doesn't need —
+  // including aggregate expressions, windows and whole join subtrees.
+  // Audited r20 (graft.tools.CountPruneAudit): 17 of 72 headliners
+  // were under-timed, worst the as-of family (q56/q58/q59/q61 count
+  // plans dropped the as-of join + BOTH windows — 4 scans -> 1,
+  // timing a plan that never ran the operator; the r14 SkewProbe
+  // lesson at bench scale), s16 (20 exchanges -> 4), t14b (22
+  // aggregates -> 10). The noop write computes every column of every
+  // row and discards it. Old count-timed vs new noop-timed numbers
+  // for the 17 affected queries are recorded in OPTIMIZATION_r20.md.
+  // QUIET_ANCHORS/ORACLE_BENCH re-anchoring under the new action was
+  // CLAIMED in r20 but not done (VERDICT r20 item 1 — 13 spurious
+  // quiet-regression flags per driver run); done for real in r21.
+  private def timedAction(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** One timed rep of `q`: clear the per-rep memos, build the frame
+    * fresh, time the noop sink. None when the rep fails.
+    */
+  private[graft] def timeRep(spark: SparkSession, q: Q, sfDir: String): Option[Double] = {
+    // Operators that persist intermediates (minhash signatures via
+    // the TextDedup memo, fitted ANN models via AnnIndex,
+    // catalog-cached frames) would serve reps 2+ from cache —
+    // clear all three so every rep measures the full query, not a
+    // cache read. Deliberately NOT cleared: Bm25.sharedRanked —
+    // s14's lexical input is BY DESIGN the compute-once shared
+    // ranking (VERDICT r10 item 1), so s14 measures fusion given
+    // that frame, while s12 (which never reads the memo) remains
+    // the full lexical-pipeline measurement — and
+    // NnDescent.sharedGraph, the same split for graph ANN: s19
+    // measures the BUILD (it never reads the memo), s20 measures
+    // the SERVE leg over the once-built graph (the number that
+    // characterizes a graph index — a deployment pays the build
+    // once and amortizes it over every search; VERDICT r13 item 4).
+    spark.catalog.clearCache()
+    graft.operators.TextDedup.clearSharedSignatures(spark)
+    graft.operators.AnnIndex.clear(spark)
+    // clearCache() does not unpersist RDD-level localCheckpoint
+    // blocks (pipe01/pipe02/s16 create ~7 per rep), so blocks from
+    // prior reps accumulate until ContextCleaner GC — at sf1+ that
+    // is real memory/disk pressure mid-bench (ADVICE r20). A
+    // System.gc() nudge here was TRIED in r21 and REJECTED on
+    // measurement: same quiet window, identical queries, the
+    // full-GC-per-rep suite read 69.203 s vs 58.618 s without it —
+    // +10.6 s spread as +0.2-0.6 s on every checkpoint-heavy query
+    // (s07/s12/s19/t21/t26/pipe02...), i.e. an 18% fidelity tax on
+    // the exact totals the driver compares round-over-round. A
+    // blanket getPersistentRDDs.unpersist is also wrong: it would
+    // destroy the sanctioned cross-rep memo frames
+    // (Bm25.sharedRanked / NnDescent.sharedGraph), whose checkpoint
+    // blocks are NOT recomputable — s14/s20 reps would then fail.
+    // Resolution: at the driver's sf0.1 shape the accumulation is
+    // harmless (blocks ≈ tens of MB/rep in a 4.6 GiB store);
+    // full-registry benches at sf1+ must set SPARK_DRIVER_MEM=48g
+    // (the documented r15 requirement) so ContextCleaner's own lazy
+    // collection keeps up without a forced pause.
+    val t0 = System.nanoTime()
+    // A failed rep is EXCLUDED from the caller's median rather than
+    // recorded as a sentinel — a -1.0 inside the sort would make a
+    // 2/3-pass query report its min as "median" and quietly shrink
+    // `total`. Its cause goes to stderr, so stdout keeps the one JSON
+    // metric line.
+    try { timedAction(q.run(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
+    catch {
+      case e: Throwable =>
+        val firstLine = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+        Console.err.println(s"[bench] ${q.name} rep failed: ${e.getClass.getName}: $firstLine")
+        None
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.core.GraftSession.local(appName = "graft-bench")
 
     // SPARK_GRAFT_BENCH_ONLY=a,b,c times just the named queries (cross-SF
     // curves, before/after checks); BENCH_ALL times the full registry.
@@ -59,23 +122,6 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     val load1Ambient = load1()
 
-    // The timed action is the NOOP SINK (guide §1.4), not count():
-    // count() lets Catalyst prune every column the count doesn't need —
-    // including aggregate expressions, windows and whole join subtrees.
-    // Audited r20 (graft.tools.CountPruneAudit): 17 of 72 headliners
-    // were under-timed, worst the as-of family (q56/q58/q59/q61 count
-    // plans dropped the as-of join + BOTH windows — 4 scans -> 1,
-    // timing a plan that never ran the operator; the r14 SkewProbe
-    // lesson at bench scale), s16 (20 exchanges -> 4), t14b (22
-    // aggregates -> 10). The noop write computes every column of every
-    // row and discards it. Old count-timed vs new noop-timed numbers
-    // for the 17 affected queries are recorded in OPTIMIZATION_r20.md.
-    // QUIET_ANCHORS/ORACLE_BENCH re-anchoring under the new action was
-    // CLAIMED in r20 but not done (VERDICT r20 item 1 — 13 spurious
-    // quiet-regression flags per driver run); done for real in r21.
-    def timedAction(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
     // Warm the JVM + parquet footers once so per-query times measure the
     // query, not first-touch JIT/IO (the cluster-realistic steady state).
     qs.headOption.foreach(q => timedAction(q.run(spark, sfDir)))
@@ -84,58 +130,8 @@ object Bench {
     // (CLAUDE.md); report the MEDIAN of `reps` timed runs per query so
     // round-over-round deltas reflect the plan, not the neighbors.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    def medianOf(q: graft.queries.Q): (Double, Int) = {
-      val times = (1 to reps).flatMap { _ =>
-        // Operators that persist intermediates (minhash signatures via
-        // the TextDedup memo, fitted ANN models via AnnIndex,
-        // catalog-cached frames) would serve reps 2+ from cache —
-        // clear all three so every rep measures the full query, not a
-        // cache read. Deliberately NOT cleared: Bm25.sharedRanked —
-        // s14's lexical input is BY DESIGN the compute-once shared
-        // ranking (VERDICT r10 item 1), so s14 measures fusion given
-        // that frame, while s12 (which never reads the memo) remains
-        // the full lexical-pipeline measurement — and
-        // NnDescent.sharedGraph, the same split for graph ANN: s19
-        // measures the BUILD (it never reads the memo), s20 measures
-        // the SERVE leg over the once-built graph (the number that
-        // characterizes a graph index — a deployment pays the build
-        // once and amortizes it over every search; VERDICT r13 item 4).
-        spark.catalog.clearCache()
-        graft.operators.TextDedup.clearSharedSignatures(spark)
-        graft.operators.AnnIndex.clear(spark)
-        // clearCache() does not unpersist RDD-level localCheckpoint
-        // blocks (pipe01/pipe02/s16 create ~7 per rep), so blocks from
-        // prior reps accumulate until ContextCleaner GC — at sf1+ that
-        // is real memory/disk pressure mid-bench (ADVICE r20). A
-        // System.gc() nudge here was TRIED in r21 and REJECTED on
-        // measurement: same quiet window, identical queries, the
-        // full-GC-per-rep suite read 69.203 s vs 58.618 s without it —
-        // +10.6 s spread as +0.2-0.6 s on every checkpoint-heavy query
-        // (s07/s12/s19/t21/t26/pipe02...), i.e. an 18% fidelity tax on
-        // the exact totals the driver compares round-over-round. A
-        // blanket getPersistentRDDs.unpersist is also wrong: it would
-        // destroy the sanctioned cross-rep memo frames
-        // (Bm25.sharedRanked / NnDescent.sharedGraph), whose checkpoint
-        // blocks are NOT recomputable — s14/s20 reps would then fail.
-        // Resolution: at the driver's sf0.1 shape the accumulation is
-        // harmless (blocks ≈ tens of MB/rep in a 4.6 GiB store);
-        // full-registry benches at sf1+ must set SPARK_DRIVER_MEM=48g
-        // (the documented r15 requirement) so ContextCleaner's own lazy
-        // collection keeps up without a forced pause.
-        val t0 = System.nanoTime()
-        // A failed rep is EXCLUDED from the median rather than recorded
-        // as a sentinel — a -1.0 inside the sort would make a 2/3-pass
-        // query report its min as "median" and quietly shrink `total`.
-        // Its cause goes to stderr, so stdout keeps the one JSON
-        // metric line.
-        try { timedAction(q.run(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-        catch {
-          case e: Throwable =>
-            val firstLine = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
-            Console.err.println(s"[bench] ${q.name} rep failed: ${e.getClass.getName}: $firstLine")
-            None
-        }
-      }.sorted
+    def medianOf(q: Q): (Double, Int) = {
+      val times = (1 to reps).flatMap(_ => timeRep(spark, q, sfDir)).sorted
       // -1.0 only when EVERY rep failed: a consistently-failing query
       // must not report a plausible time.
       val median = if (times.isEmpty) -1.0 else times(times.length / 2)
@@ -154,34 +150,20 @@ object Bench {
     // of 3 per headline query, keyed by sf basename); when present the
     // bench line carries per-query spark/duckdb ratios. Loaded BEFORE
     // the rerun decision — the anchors are a defense trigger too.
-    val oracleTimes: Map[String, Double] = try {
-      // check.py writes the repo-root path; the cwd-relative name covers
-      // running from the repo itself or a custom launcher dir
-      val f = Seq(
+    // check.py writes the repo-root path; the cwd-relative name covers
+    // running from the repo itself or a custom launcher dir
+    val oracleTimes = sfKeyedTimes(sfDir, Seq(
         sys.env.getOrElse("SPARK_GRAFT_ORACLE_BENCH", "ORACLE_BENCH.json"),
         "/root/repo/ORACLE_BENCH.json")
-        .map(new java.io.File(_)).find(_.isFile).get
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(f).path(new java.io.File(sfDir).getName)
-      val it = node.fieldNames()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(k => k -> node.get(k).asDouble()).toMap
-    } catch { case _: Throwable => Map.empty }
+        .map(new java.io.File(_)))
 
     // Quiet-load anchors: the builder's median-of-3 readings taken at
     // load1 < ~2 (the BASELINE.md per-round table, machine-readable).
     // Third defense trigger — see needsRerun's scaladoc.
-    val quietTimes: Map[String, Double] = try {
-      val f = Seq(
+    val quietTimes = sfKeyedTimes(sfDir, Seq(
         sys.env.getOrElse("SPARK_GRAFT_QUIET_ANCHORS", "QUIET_ANCHORS.json"),
         "/root/repo/QUIET_ANCHORS.json")
-        .map(new java.io.File(_)).find(_.isFile).get
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(f).path(new java.io.File(sfDir).getName)
-      val it = node.fieldNames()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(k => k -> node.get(k).asDouble()).toMap
-    } catch { case _: Throwable => Map.empty }
+        .map(new java.io.File(_)))
 
     // Self-defense against ambient-load outliers (the r7 d06/d08/d09
     // episode: 4–12× apparent regressions with zero code change): any
@@ -328,6 +310,21 @@ object Bench {
     val nFailed = results.count(_._2 < 0)
     s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","n":${results.size},"n_failed":$nFailed,"load1":${num(load1, 2)},"sf":"${new java.io.File(sfDir).getName}"}"""
   }
+
+  /** The `sfDir` basename's entry of an SF-keyed JSON map
+    * (`{"sf0.1": {"q01_...": 0.123, ...}}`, the ORACLE_BENCH.json and
+    * QUIET_ANCHORS.json shape), read from the first of `candidates`
+    * that is a file. Empty when none is, or when it does not parse:
+    * the anchors are optional inputs, never a reason to fail a run.
+    */
+  private[graft] def sfKeyedTimes(sfDir: String, candidates: Seq[java.io.File]): Map[String, Double] =
+    try {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(candidates.find(_.isFile).get).path(new java.io.File(sfDir).getName)
+      val it = node.fieldNames()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(k => k -> node.get(k).asDouble()).toMap
+    } catch { case _: Throwable => Map.empty }
 
   // ---- ambient-load self-defense plumbing (pinned by BenchDefenseSpec) ----
 

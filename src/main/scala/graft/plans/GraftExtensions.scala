@@ -1,37 +1,16 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftshim.SparkShims
 
 import graft.functions._
 
-/** Session extensions for the graft engine: the native expressions as
-  * SQL functions plus the native-kernel optimizer rewrite. Production
-  * use:
-  *
-  *   spark.sql.extensions=graft.plans.GraftExtensions
-  *
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
-  * For an already-running session use `GraftExtensions.install(spark)`
-  * (public `experimental.extraOptimizations` + function registry).
+/** The graft engine's session extensions: the native expressions as
+  * SQL functions, the native-kernel and rank-limit optimizer rules, and
+  * the top-k planner strategy. `graft.core.GraftSession.local` installs
+  * them on every session it builds.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, name),
-        builder))
-    }
-    ext.injectOptimizerRule(_ => NativeKernelRule)
-    ext.injectOptimizerRule(_ => RankLimitRule)
-    ext.injectPlannerStrategy(_ => TopKStrategy)
-  }
-}
-
 object GraftExtensions {
 
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -45,13 +24,16 @@ object GraftExtensions {
         s"word_shingles(text, n): n must be an integer literal, got $other")
     })))
 
-  /** Register on a live session (extensions only apply at session
-    * construction): SQL functions via the registry, the rewrite rule
-    * via the public experimental hook.
+  /** Register on a live session: SQL functions via the registry, the
+    * rules and the strategy via the public experimental hooks. Each
+    * piece is added only when the session lacks it, so a repeat call
+    * changes nothing (and logs no "replaced a previously registered
+    * function" WARN).
     */
   def install(spark: SparkSession): Unit = {
     functions.foreach { case (name, builder) =>
-      org.apache.spark.sql.graftshim.SparkShims.registerFunction(spark, name, builder)
+      if (!SparkShims.functionExists(spark, name))
+        SparkShims.registerFunction(spark, name, builder)
     }
     Seq(NativeKernelRule, RankLimitRule).foreach { rule =>
       if (!spark.experimental.extraOptimizations.contains(rule))

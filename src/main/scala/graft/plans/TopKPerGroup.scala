@@ -133,10 +133,12 @@ object RankLimitRule extends Rule[LogicalPlan] {
       limitFor(cond, alias.toAttribute) match {
         case Some(k) =>
           // keep (or introduce) the map-side WindowGroupLimit
-          // pre-truncation: when this rule runs before Spark's
-          // InferWindowGroupLimit batch (the withExtensions path), the
-          // Window child has no WGL yet — wrap it ourselves so each map
-          // partition ships at most k rows per group to the shuffle
+          // pre-truncation: Spark's InferWindowGroupLimit batch runs
+          // before this user-provided rule and usually inserted it
+          // already, but it skips a k above
+          // spark.sql.optimizer.windowGroupLimitThreshold (1000 by
+          // default) — wrap it ourselves then, so each map partition
+          // still ships at most k rows per group to the shuffle
           val preTruncated = child match {
             case _: WindowGroupLimit => child
             case other => WindowGroupLimit(partitionSpec, orderSpec, rankFn, k, other)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the sliced as-of join's reason to exist: wall time of the
@@ -20,14 +19,7 @@ object SkewProbe {
     val sfDir = args(0)
     val hotFraction = if (args.length > 1) args(1).toDouble else 0.5
     val copies = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(appName = "skew-probe")
     import spark.implicits._
 
     // collapse a deterministic hotFraction of users onto user 0: the

@@ -2,9 +2,9 @@ package graft.tools
 
 import graft.queries.Registry
 
-/** Same-shape A/B timer for a subset of registry queries: the bench's
-  * methodology (build the df fresh per rep, time the noop sink — guide
-  * §1.4 — clear session memos between reps) without the 72-headliner
+/** Same-shape A/B timer for a subset of registry queries: each rep is
+  * one `graft.Bench.timeRep` (clear the per-rep memos, build the df
+  * fresh, time the noop sink — guide §1.4) without the 72-headliner
   * sweep. Subset readings run JIT-cold and read 1.3-1.7× above
   * full-registry numbers (the r14 lesson) — compare ONLY probe-vs-probe
   * under the same conditions, never probe-vs-anchor.
@@ -17,26 +17,11 @@ object TimeQueries {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 5
     val spark = graft.core.GraftSession.local(appName = "time-queries")
-    graft.plans.GraftExtensions.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val q = Registry.byName(name)
-      val times = (1 to reps).flatMap { _ =>
-        spark.catalog.clearCache()
-        graft.operators.TextDedup.clearSharedSignatures(spark)
-        graft.operators.AnnIndex.clear(spark)
-        System.gc()
-        val t0 = System.nanoTime()
-        try {
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Exception =>
-            Console.err.println(s"[time] $name failed: ${e.getMessage}")
-            None
-        }
-      }
-      val med = times.sorted.apply(times.length / 2)
+      val times = (1 to reps).flatMap(_ => graft.Bench.timeRep(spark, q, sfDir))
+      // -1.0 when every rep failed, as in Bench (each cause is on stderr)
+      val med = if (times.isEmpty) -1.0 else times.sorted.apply(times.length / 2)
       println(f"""{"query":"$name","median":$med%.3f,"reps":[${
         times.map(t => f"$t%.3f").mkString(",")}]}""")
     }

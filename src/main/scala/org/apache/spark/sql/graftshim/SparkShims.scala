@@ -39,4 +39,9 @@ object SparkShims {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** True when the session's function registry already holds `name`. */
+  def functionExists(spark: org.apache.spark.sql.SparkSession, name: String): Boolean =
+    spark.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
 }

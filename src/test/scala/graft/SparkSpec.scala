@@ -3,15 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GraftSession
-
 /** Shared local SparkSession for all suites (one per JVM — sbt forks a
-  * single test JVM).
+  * single test JVM), with the engine's extensions installed once, as
+  * `graft.core.GraftSession.local` does for every main: each suite sees
+  * the plans the gate runs, whatever ran before it.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    SparkSession.builder()
+    val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
@@ -20,6 +20,8 @@ object TestSpark {
       .config("spark.sql.warehouse.dir", tmp)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.plans.GraftExtensions.install(s)
+    s
   }
 }
 

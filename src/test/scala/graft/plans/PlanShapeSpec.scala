@@ -32,7 +32,6 @@ import graft.queries.Registry
 class PlanShapeSpec extends SparkSpec {
 
   private def plan(name: String): String = {
-    GraftExtensions.install(spark)
     Registry.byName(name).run(spark, sfDir).queryExecution.executedPlan.toString
   }
 
@@ -70,7 +69,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q02 pushes its range predicates into the parquet scan and prunes columns") {
-    GraftExtensions.install(spark)
     // toString elides long metadata ("PushedFilters: [..., GreaterT...")
     // — formatted explain prints the scan metadata in full
     val p = Registry.byName("q02_filter_project").run(spark, sfDir)
@@ -388,7 +386,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q41/q55 build the CMS grid from the census — the corpus is tokenized ONCE at runtime") {
-    GraftExtensions.install(spark)
     // runtime reuse needs UNCACHED scans: a suite-mate's .cache() of
     // the table wraps each branch in its own TableCacheQueryStage,
     // which do not canonicalize equal, and the ReusedExchange never
@@ -409,7 +406,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("t25 is one per-type aggregate + one 1-row roll-up: 4 exchanges, no joins") {
-    GraftExtensions.install(spark)
     spark.catalog.clearCache()
     val p = finalPlan(graft.queries.TextQueries.t25Base(spark, sfDir))
     assert(count(p, "Generate") == 1,
@@ -438,7 +434,6 @@ class PlanShapeSpec extends SparkSpec {
     // partly for this (a nullable key's inferred isnotnull pushdown
     // broke canonical equality; measured r14) — so sessionization
     // runs ONCE.
-    GraftExtensions.install(spark)
     spark.catalog.clearCache() // cached scans defeat runtime reuse
     val p = finalPlan(Registry.byName("q59_pit_features").run(spark, sfDir))
     assert(count(p, "ReusedExchange") >= 1,

@@ -19,7 +19,6 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("RankLimitRule rewrites filter-over-row_number into TopKPerGroupExec") {
-    GraftExtensions.install(spark)
     val df = windowTopK(3)
     val physical = df.queryExecution.executedPlan.toString
     assert(physical.contains("TopKPerGroup"),
@@ -32,7 +31,6 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("TopKPerGroup results == window row_number results (k=3, with rank values)") {
-    GraftExtensions.install(spark)
     val viaOperator = windowTopK(3).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getInt(3))).toSet
     // reference computed without the rule
@@ -52,7 +50,6 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("rn === 1 (the Req-B best-year shape) also rewrites and matches the oracle query") {
-    GraftExtensions.install(spark)
     val q05 = Registry.byName("q05_window_top1")
     val viaOperator = q05.run(spark, sfDir)
     assert(viaOperator.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
@@ -66,7 +63,6 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("property: operator == window on random data, random k, heavy ties") {
-    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(42)
     (1 to 5).foreach { trial =>
       val k = 1 + rnd.nextInt(4)
@@ -91,7 +87,6 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("filters NOT on the rank attribute are left untouched") {
-    GraftExtensions.install(spark)
     val yearly = Tables.lineitem(spark, sfDir)
       .groupBy($"l_suppkey", year($"l_shipdate").as("ship_year"))
       .agg(round(sum($"l_extendedprice"), 2).as("revenue"))
